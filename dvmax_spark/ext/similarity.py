@@ -454,9 +454,10 @@ def semantic_dedup(
 
     The scale shape is the composition of two already-bounded pieces:
     the pair stage shuffles once on (table, bucket) with ``max_bucket``
-    capping degenerate buckets, and component labeling is the iterative
-    min-label propagation of ext/dedup.py (one shuffle join + one
-    min-aggregate per round, checkpointed). Returns one row per vector:
+    capping degenerate buckets, and component labeling is the
+    alternating large-star/small-star connected components of
+    ext/dedup.py (two windowed edge passes per round, checkpointed;
+    O(log n) rounds). Returns one row per vector:
     (id, cluster_id, cluster_size, keep)."""
     from dvmax_spark.ext.dedup import dedup_clusters
 
@@ -582,8 +583,8 @@ def semdedup_kmeans(
 
     Scale shape: one KMeans fit over the (normalized) vectors (MLlib,
     sampled init, seed pinned), one shuffle on probe-cluster id for
-    the within-pool self-join, then the bounded component propagation
-    of ext/dedup.py. Returns one row per vector:
+    the within-pool self-join, then the connected components of
+    ext/dedup.py (dedup_clusters). Returns one row per vector:
     ``(id, kbucket, cluster_id, cluster_size, keep)``. Rows-only in
     the registry: MLlib KMeans has no cross-engine oracle (the LSH
     form x_semantic_dedup carries the family's value-exact evidence).

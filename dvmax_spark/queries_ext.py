@@ -16,7 +16,6 @@ from dvmax_spark.ext.dedup import (
     NearDupGraph,
     dedup_clusters,
     dedup_clusters_sql,
-    dedup_clusters_twophase,
     exact_dedup,
     incremental_dedup_sql,
     minhash_lsh_pairs,
@@ -367,13 +366,14 @@ def x_minhash_lsh(spark: SparkSession, sf: str) -> DataFrame:
 @query("x_dedup_clusters", ids=("X17",), bench=True, sql=dedup_clusters_sql())
 def x_dedup_clusters(spark: SparkSession, sf: str) -> DataFrame:
     """Near-dup cluster assignment + canonical-doc selection: MinHash
-    LSH pairs → connected components (iterative min-label propagation)
-    → keep the longest doc per cluster. The step that turns pairwise
-    near-dup evidence into a per-document dedup verdict — what a
-    100 TB training-data pipeline actually executes. Deterministic end
-    to end (portable hashes; min-id component labels), so the whole
-    pipeline has an exact DuckDB oracle via a recursive reachability
-    CTE (ext/dedup.py:dedup_clusters_sql). This is the family's ONE
+    LSH pairs → connected components (alternating large-star/small-star,
+    ext/dedup.py:connected_components_twophase) → keep the longest doc
+    per cluster. The step that turns pairwise near-dup evidence into a
+    per-document dedup verdict — what a 100 TB training-data pipeline
+    actually executes. Deterministic end to end (portable hashes;
+    min-id component labels), so the whole pipeline has an exact DuckDB
+    oracle via a recursive reachability CTE
+    (ext/dedup.py:dedup_clusters_sql). This is the family's ONE
     deliberately regenerate-from-scratch form (end-to-end coverage of
     the signature+band pipeline in a single plan); the other five
     graph consumers read the persisted NearDupGraph artifact."""
@@ -390,17 +390,12 @@ def x_dedup_clusters(spark: SparkSession, sf: str) -> DataFrame:
 
 @query("x_dedup_clusters_twophase", ids=("X17",), bench=True, sql=dedup_clusters_sql())
 def x_dedup_clusters_twophase(spark: SparkSession, sf: str) -> DataFrame:
-    """x_dedup_clusters with components computed by the ALTERNATING
-    large-star/small-star algorithm (Kiveris et al., MAPREDUCE'14)
-    instead of min-label propagation: O(log n) rounds on ANY graph
-    shape (propagation needs diameter rounds — O(n) on paraphrase/CDC
-    chains). Both converge to min-id component labels, so this shares
-    x_dedup_clusters' exact recursive-CTE DuckDB oracle — two
-    independent distributed algorithms checked against one sequential
-    ground truth. Pairs come from the persisted NearDupGraph artifact
-    (_ndg_pairs — built once, read by every graph consumer)."""
+    """x_dedup_clusters over the persisted NearDupGraph pairs
+    (_ndg_pairs — built once, read by every graph consumer) instead of
+    regenerating the MinHash LSH pairs in the plan; shares
+    x_dedup_clusters' exact recursive-CTE DuckDB oracle."""
     docs = load_table(spark, "documents", sf)
-    return dedup_clusters_twophase(docs, _ndg_pairs(spark, sf), rank_col="n_chars").orderBy("doc_id")
+    return dedup_clusters(docs, _ndg_pairs(spark, sf), rank_col="n_chars").orderBy("doc_id")
 
 
 @query("x_incremental_components", ids=("X17",), bench=True, sql=dedup_clusters_sql())

@@ -53,6 +53,8 @@ def query(name: str, ids=(), sql: str | None = None, bench: bool = False, doc: s
 # preferred. Queries past 50 are extra coverage variants whose IDs are
 # all already covered above. Keep new queries inside the first 50 only
 # by displacing a redundant one.
+DRIVER_QUERY_CAP = 50
+
 PRIORITY: tuple[str, ...] = (
     # flagship + scan/filter basics
     "s1_scan_project",

@@ -10,9 +10,8 @@ What the assertions pin:
     banded LSH at scale;
   * exact_dedup (the cheap first pass) is what catches the identical
     family — the documented division of labor with the capped LSH;
-  * min-label propagation converges within max_iter on realistic
-    (star/short-chain) graphs and TERMINATES on adversarial chains
-    even when max_iter is too small to converge;
+  * connected components label realistic (star/short-chain) graphs
+    and adversarial chains exactly (two-phase CC, O(log n) rounds);
   * end-to-end wall-clock stays bounded (generous: this container has
     5-10x timing noise; the real scale signal is the pair-count bound).
 
@@ -88,7 +87,7 @@ def test_dedup_pipeline_survives_adversarial_corpus(spark):
 
     t0 = time.perf_counter()
     clusters = dedup_clusters(
-        docs, pairs.select("id_a", "id_b").unionByName(fam_edges), max_iter=20
+        docs, pairs.select("id_a", "id_b").unionByName(fam_edges)
     ).cache()
     rows = {r["doc_id"]: r for r in clusters.collect()}
     cluster_secs = time.perf_counter() - t0
@@ -97,7 +96,7 @@ def test_dedup_pipeline_survives_adversarial_corpus(spark):
     fam = [r for i, r in rows.items() if i < 10_000]
     assert all(r["cluster_id"] == 0 and r["cluster_size"] == N_IDENTICAL for r in fam)
     assert sum(r["keep"] for r in fam) == 1
-    # chain: one cluster of N_CHAIN (diameter N_CHAIN-1 < max_iter)
+    # chain: one cluster of N_CHAIN (diameter N_CHAIN-1)
     chain = [r for i, r in rows.items() if 10_000 <= i < 20_000]
     assert all(r["cluster_id"] == 10_000 and r["cluster_size"] == N_CHAIN for r in chain)
     assert sum(r["keep"] for r in chain) == 1
@@ -133,8 +132,9 @@ def test_minhash_candidate_shapes_agree(spark):
 
 
 def test_dedup_clusters_terminates_on_adversarial_chain(spark):
-    """A 50-edge path with max_iter=3 cannot converge — the bound must
-    still TERMINATE the loop and return every doc exactly once."""
+    """A 50-node path (diameter 49, the worst shape per edge) must
+    resolve to ONE exact cluster: every doc labelled 0, size 50, and
+    exactly one keeper."""
     from dvmax_spark.ext.dedup import dedup_clusters
 
     n = 50
@@ -142,9 +142,10 @@ def test_dedup_clusters_terminates_on_adversarial_chain(spark):
     pairs = spark.range(n - 1).select(
         F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
     )
-    out = dedup_clusters(docs, pairs, max_iter=3)
-    assert out.count() == n
-    assert out.select("doc_id").distinct().count() == n
+    rows = dedup_clusters(docs, pairs).collect()
+    assert sorted(r["doc_id"] for r in rows) == list(range(n))
+    assert all(r["cluster_id"] == 0 and r["cluster_size"] == n for r in rows)
+    assert sum(r["keep"] for r in rows) == 1
 
 
 def test_canonical_by_degree_picks_the_hub(spark):
@@ -228,29 +229,32 @@ def test_twophase_chain_converges_logarithmically(spark):
     assert all(r["label"] == 0 for r in rows)
 
 
-def test_twophase_cluster_output_matches_propagation(spark):
-    """dedup_clusters_twophase and dedup_clusters agree row-for-row
-    (cluster_id, cluster_size, keep) on the hand-built chain + star +
-    singleton graph and on a random graph with a rank column."""
+def test_twophase_cluster_output_matches_union_find(spark):
+    """dedup_clusters' (cluster_id, cluster_size, keep) equals the
+    sequential union-find reference on the hand-built chain + star +
+    singleton graph and on a random graph with a rank column
+    (canonical = max rank, tie-break min id)."""
     import random
+    from collections import Counter
 
-    from dvmax_spark.ext.dedup import dedup_clusters, dedup_clusters_twophase
+    from dvmax_spark.ext.dedup import dedup_clusters
 
-    docs = spark.createDataFrame(
-        [(i, 10 * ((i * 7) % 9)) for i in range(1, 30)], "doc_id long, w long"
-    )
+    ws = {i: 10 * ((i * 7) % 9) for i in range(1, 30)}
+    docs = spark.createDataFrame(list(ws.items()), "doc_id long, w long")
     rng = random.Random(11)
     hand = [(1, 2), (2, 3), (3, 4), (5, 6), (5, 7)]
     rnd = [(rng.randrange(1, 30), rng.randrange(1, 30)) for _ in range(25)]
     for edges in (hand, [(a, b) for a, b in rnd if a != b]):
+        truth = _union_find_labels(30, edges)
+        size = Counter(truth[i] for i in ws)
+        keeper = {}
+        for i in sorted(ws, key=lambda i: (-ws[i], i)):
+            keeper.setdefault(truth[i], i)
+        want = sorted(
+            (i, truth[i], size[truth[i]], keeper[truth[i]] == i) for i in ws
+        )
         pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-        a = sorted(
+        got = sorted(
             map(tuple, dedup_clusters(docs, pairs, rank_col="w").collect())
         )
-        b = sorted(
-            map(
-                tuple,
-                dedup_clusters_twophase(docs, pairs, rank_col="w").collect(),
-            )
-        )
-        assert a == b
+        assert got == want

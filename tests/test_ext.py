@@ -379,8 +379,8 @@ def test_fold_table_on_testdata_embeddings(spark, emb):
 
 
 def test_dedup_clusters_graph_semantics(spark):
-    """Connected components on a hand-built graph: a 4-chain (worst
-    diameter shape for min propagation), a star, and singletons all
+    """Connected components on a hand-built graph: a 4-chain (the
+    largest-diameter shape per edge), a star, and singletons all
     resolve to min-id components; canonical = highest rank, tie-break
     min id; singletons keep themselves."""
     from dvmax_spark.ext.dedup import dedup_clusters

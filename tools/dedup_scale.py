@@ -100,7 +100,7 @@ def main() -> None:
     t_clusters = time.perf_counter() - t0
     print(f"dedup_clusters: {n_clustered:,} non-root members in {t_clusters:.1f} s")
 
-    # --- two-phase CC vs min-label propagation on the same pair set
+    # --- the CC core alone (labels + round count) on the same pair set
     # (the 50-doc chain is the diameter shape twophase exists for)
     from dvmax_spark.ext.dedup import connected_components_twophase
 
@@ -112,7 +112,7 @@ def main() -> None:
     t_two = time.perf_counter() - t0
     print(
         f"connected_components_twophase: {n_lab:,} labeled in {rounds} "
-        f"LS+SS rounds, {t_two:.1f} s (propagation above: diameter-bound)"
+        f"LS+SS rounds, {t_two:.1f} s"
     )
 
     # --- ExactSubstr-style span removal over the same corpus (the

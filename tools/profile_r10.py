@@ -53,7 +53,6 @@ def main() -> None:
         from dvmax_spark.ext.dedup import (
             connected_components_twophase,
             dedup_clusters,
-            dedup_clusters_twophase,
         )
 
         pairs = qext._ndg_pairs(spark, SF)
@@ -61,8 +60,7 @@ def main() -> None:
         t0 = time.perf_counter()
         labels, rounds = connected_components_twophase(pairs)
         t(f"cc_twophase labels ({rounds} rounds)", labels)
-        t("dedup_clusters_twophase full", dedup_clusters_twophase(docs, qext._ndg_pairs(spark, SF), rank_col="n_chars"))
-        t("dedup_clusters (propagation) full", dedup_clusters(docs, qext._ndg_pairs(spark, SF), rank_col="n_chars"))
+        t("dedup_clusters full", dedup_clusters(docs, qext._ndg_pairs(spark, SF), rank_col="n_chars"))
 
     if "incr" in sections:
         from dvmax_spark.ext.dedup import (
